@@ -17,10 +17,16 @@ Scale design notes (10^12-doc target):
   could: the loser crawl of a url spanning two dates would win inside a
   resumed date slice). Output files stay partitioned by
   (crawl_date, host_bucket) for pruning; the lineage table records
-  per-bucket row/token/node/error counts; a rerun anti-joins committed
-  buckets and processes only the remainder.
+  per-bucket row/token/node/error counts. A rerun reads the lineage table
+  once (at most ``N_HOST_BUCKETS`` rows), filters the committed buckets out
+  of its input and processes only the remainder; when none remain it
+  returns before the extraction plan runs, leaving output and lineage
+  untouched.
+* **Summary from lineage** — the job summary is summed from the lineage
+  rows, so the output is scanned once after a write (to rebuild lineage),
+  never a second time for the summary.
 * **No driver-side loops** — everything is one DataFrame plan; the only
-  ``collect`` is the tiny lineage summary.
+  ``collect`` is the tiny lineage table.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .io_tables import with_layout_columns
@@ -133,12 +140,13 @@ class ExtractionJob:
     def lineage_path(self) -> str:
         return os.path.join(self.output_path, "lineage")
 
-    def committed_partitions(self) -> DataFrame | None:
+    def lineage_rows(self) -> list:
+        """The committed lineage table as driver rows (at most
+        ``N_HOST_BUCKETS``); empty when nothing is committed yet."""
         try:
-            return (self.spark.read.parquet(self.lineage_path)
-                    .select("host_bucket").distinct())
-        except Exception:
-            return None
+            return self.spark.read.parquet(self.lineage_path).collect()
+        except AnalysisException:
+            return []
 
     def run(self, pages: DataFrame, *, resume: bool = True) -> dict:
         """Execute the job; returns a summary dict."""
@@ -147,11 +155,14 @@ class ExtractionJob:
 
         pages = with_layout_columns(pages)
 
-        committed = self.committed_partitions() if resume else None
-        if committed is not None:
-            # resume: drop already-committed host buckets (the commit unit)
-            pages = pages.join(F.broadcast(committed),
-                               on=["host_bucket"], how="left_anti")
+        committed = self.lineage_rows() if resume else []
+        if committed:
+            # resume: drop already-committed host buckets (the commit unit;
+            # host_bucket is never null, so this equals a left-anti join)
+            done = [r["host_bucket"] for r in committed]
+            pages = pages.filter(~F.col("host_bucket").isin(done))
+            if pages.select("host_bucket").isEmpty():
+                return _summary(committed, t0)
 
         # The dedup window shuffles by hash(url), which is uniformly
         # distributed — after it, no host skew can exist, so the kernel runs
@@ -171,14 +182,15 @@ class ExtractionJob:
         # layout columns re-derived post-kernel (rows are now small: the html
         # payload is gone, so this repartition moves ~1% of the input bytes).
         # Shared helper so the bucket count can never drift from the lineage
-        # table / resume anti-join (both key on the same host_bucket).
+        # table / resume filter (both key on the same host_bucket).
         extracted = with_layout_columns(extracted)
 
-        # dynamic partition overwrite = atomic per-partition commit
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # dynamic partition overwrite = atomic per-partition commit; set on
+        # this writer only, never on the caller's session
         (extracted
          .repartition("crawl_date", "host_bucket")
          .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
          .partitionBy("crawl_date", "host_bucket")
          .parquet(self.text_path))
 
@@ -192,15 +204,25 @@ class ExtractionJob:
                    .withColumn("engine_version", F.lit(self.engine_version))
                    .withColumn("committed_at", F.current_timestamp()))
         lineage.write.mode("overwrite").parquet(self.lineage_path)
+        return _summary(self.lineage_rows(), t0)
 
-        stats = (out.agg(F.count("*").alias("rows"),
-                         F.sum("token_count").alias("tokens"),
-                         F.sum("errors").alias("errors"),
-                         F.sum("html_bytes").alias("bytes"))
-                 .collect()[0].asDict())
-        stats["wall_seconds"] = time.time() - t0
-        stats["docs_per_sec"] = stats["rows"] / stats["wall_seconds"] if stats["wall_seconds"] else 0.0
-        return stats
+
+def _sql_sum(values) -> int | None:
+    """SQL ``sum`` over driver values: nulls skipped, NULL when none remain."""
+    values = [v for v in values if v is not None]
+    return sum(values) if values else None
+
+
+def _summary(lineage: list, t0: float) -> dict:
+    """The job summary from lineage rows: the same figures (and NULL-on-empty
+    sums) as an aggregate over the whole output, without re-reading it."""
+    stats = {"rows": sum(r["row_count"] for r in lineage),
+             "tokens": _sql_sum(r["token_count"] for r in lineage),
+             "errors": _sql_sum(r["error_count"] for r in lineage),
+             "bytes": _sql_sum(r["input_bytes"] for r in lineage)}
+    stats["wall_seconds"] = time.time() - t0
+    stats["docs_per_sec"] = stats["rows"] / stats["wall_seconds"] if stats["wall_seconds"] else 0.0
+    return stats
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,

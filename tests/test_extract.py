@@ -111,6 +111,43 @@ def test_decode_retry_on_declared_charset():
     assert doc2["declared_charset"] == "ISO-8859-1"
 
 
+def test_extract_kernel_matches_process_document():
+    """One make_extract_kernel batch equals process_document field by field
+    for the same bytes, across every decode path."""
+    import pandas as pd
+
+    from fortissimo_spark.kernel import make_extract_kernel
+    from fortissimo_spark.schema import EXTRACT_SCHEMA
+
+    body = "<p>Caf\xe9 \u201cquoted\u201d text long enough to be kept.</p>"
+    late = ("<html><head><!--" + "x" * 2100 + '--><meta charset="windows-1252">'
+            "</head><body>" + body + "</body></html>")
+    raws = [
+        ("<html><body>" + body + "</body></html>").encode("utf-8"),
+        ('<html><head><meta charset="ISO-8859-1"></head><body>'
+         "<p>Ma\xf1ana is long enough to keep as a block.</p></body></html>"
+         ).encode("iso-8859-1"),
+        late.encode("cp1252"),
+        "\ufeff<html><body>{}</body></html>".format(body).encode("utf-16-le"),
+        None,
+    ]
+    pdf = pd.DataFrame({"url": [f"http://h/{i}" for i in range(len(raws))],
+                        "warc_ts": pd.Timestamp("2024-01-01"),
+                        "lang": "en", "html": raws})
+    fields = [f.name for f in EXTRACT_SCHEMA.fields
+              if f.name not in ("url", "warc_ts", "lang")]
+    for verify in (False, True):
+        (out,) = make_extract_kernel("density", verify)(iter([pdf]))
+        for i, raw in enumerate(raws):
+            doc = process_document(raw if raw is not None else b"", "density",
+                                   verify_roundtrip=verify)
+            for f in fields:
+                assert out[f].tolist()[i] == doc[f], (i, f, verify)
+    used = out["used_encoding"].tolist()
+    assert used[:4] == ["utf-8", "iso8859-1", "cp1252", "utf-16-le"]
+    assert out["encoding_retried"].tolist() == [False, False, True, False, False]
+
+
 def test_utf16_page_roundtrip():
     html = "<html><body><p>sixteen bit page body long enough to keep.</p></body></html>\n"
     raw = b"\xff\xfe" + html.encode("utf-16-le")

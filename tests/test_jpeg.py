@@ -352,18 +352,27 @@ def _emit_ac_refine_block(bw, zz, ss, se, al):
     hi = 1 << (al + 1)
     pending = []
     r = 0
+    # the last newly-nonzero coefficient: zero runs past it fold into EOB
+    last_new = max((k for k in range(ss, se + 1) if 0 < abs(int(zz[k])) < hi),
+                   default=-1)
     for k in range(ss, se + 1):
         v = int(zz[k])
+        if v == 0:
+            r += 1
+            continue
+        # a ZRL passes 16 zero-history coefficients and carries the
+        # correction bits of the old-nonzero ones among them, so it goes
+        # out before any later coefficient's bit (libjpeg encode_mcu_AC_refine)
+        while r > 15 and k <= last_new:
+            code, ln = _AC_ENC[0xF0]
+            bw.write(code, ln)
+            for b in pending:
+                bw.write(b, 1)
+            pending = []
+            r -= 16
         if abs(v) >= hi:          # old-nonzero: correction bit
             pending.append((abs(v) >> al) & 1)
-        elif v != 0:              # newly nonzero: must be ±(1<<al)
-            while r > 15:
-                code, ln = _AC_ENC[0xF0]
-                bw.write(code, ln)
-                for b in pending:
-                    bw.write(b, 1)
-                pending = []
-                r -= 16
+        else:                     # newly nonzero: must be ±(1<<al)
             code, ln = _AC_ENC[(r << 4) | 1]
             bw.write(code, ln)
             bw.write(1 if v > 0 else 0, 1)  # sign bit
@@ -371,8 +380,6 @@ def _emit_ac_refine_block(bw, zz, ss, se, al):
                 bw.write(b, 1)
             pending = []
             r = 0
-        else:
-            r += 1
     if r or pending:
         code, ln = _AC_ENC[0x00]  # EOB (run of 1)
         bw.write(code, ln)

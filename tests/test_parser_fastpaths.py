@@ -82,6 +82,23 @@ def test_stray_slash_attribute():
     assert r.to_string() == "<a b / c>"
 
 
+def test_quote_adjacent_attributes_take_the_general_machine():
+    # a quoted value that closes before the tag's last quote is followed
+    # by more attributes: node-level pins (round-trip alone hides this)
+    for q in ('"', "'"):
+        src = f"<a b={q}x{q}c={q}y{q}>"
+        r = parse(src)
+        (el,) = _els(r)
+        assert _attrs(r.dom, el) == [("b", "x", " ", "=", q),
+                                     ("c", "y", "", "=", q)]
+        assert r.errors == 0 and r.to_string() == src
+        # same attributes as the general machine (a first attribute keeps
+        # the tag off the single-attribute fast path)
+        g = parse(f"<a z=1 b={q}x{q}c={q}y{q}>")
+        (gel,) = _els(g)
+        assert _attrs(g.dom, gel)[1:] == _attrs(r.dom, el)
+
+
 def test_equals_then_gt_is_valueless_with_inner_ws():
     r = parse("<a b= >")
     (el,) = _els(r)

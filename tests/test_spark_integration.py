@@ -75,6 +75,17 @@ def test_roundtrip_all_pages(spark, pages):
     assert bad == 0
 
 
+def _file_snapshot(root: str) -> dict:
+    """{relative path: mtime_ns} of every file under ``root``."""
+    return {os.path.relpath(os.path.join(d, f), root):
+            os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(root) for f in files}
+
+
+def _job_figures(stats: dict) -> dict:
+    return {k: stats[k] for k in ("rows", "tokens", "errors", "bytes")}
+
+
 def test_pipeline_run_and_resume(spark, pages, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("extraction_job"))
     job = ExtractionJob(spark, out_dir)
@@ -90,8 +101,7 @@ def test_pipeline_run_and_resume(spark, pages, tmp_path_factory):
     assert lineage.agg(F.sum("row_count")).collect()[0][0] == stats["rows"]
 
     # simulate a partial failure: delete one committed bucket's lineage rows
-    committed = job.committed_partitions()
-    n_partitions = committed.count()
+    n_partitions = len(job.lineage_rows())
     one = lineage.orderBy("host_bucket").limit(n_partitions - 1)
     one.write.mode("overwrite").parquet(job.lineage_path + "_tmp")
     shutil.rmtree(job.lineage_path)
@@ -103,6 +113,53 @@ def test_pipeline_run_and_resume(spark, pages, tmp_path_factory):
     rows2 = [(r.url, r.text) for r in result2.collect()]
     assert rows1 == rows2
     assert stats2["rows"] == stats["rows"]
+    lineage2 = spark.read.parquet(job.lineage_path)
+    assert lineage2.count() == n_partitions
+    assert lineage2.agg(F.sum("row_count")).collect()[0][0] == stats2["rows"]
+
+    # every bucket is committed again: the next run is a no-op
+    before = _file_snapshot(out_dir)
+    stats3 = job.run(pages)
+    assert _file_snapshot(out_dir) == before
+    assert _job_figures(stats3) == _job_figures(stats2)
+
+
+@pytest.fixture(scope="module")
+def committed_job(spark, pages, tmp_path_factory):
+    """An ExtractionJob whose output has every bucket committed, with the
+    stats of the run that committed them."""
+    job = ExtractionJob(spark, str(tmp_path_factory.mktemp("committed_job")))
+    return job, job.run(pages, resume=False)
+
+
+def test_noop_resume_returns_run_stats(spark, pages, committed_job):
+    job, stats = committed_job
+    resumed = _job_figures(job.run(pages, resume=True))
+    assert resumed == _job_figures(stats)
+    assert all(type(v) is int for v in resumed.values())
+
+
+def test_noop_resume_leaves_files_untouched(spark, pages, committed_job):
+    job, _ = committed_job
+    before = _file_snapshot(job.output_path)
+    assert any(p.startswith("lineage") for p in before)
+    assert any(p.startswith("extracted") for p in before)
+    job.run(pages, resume=True)
+    assert _file_snapshot(job.output_path) == before
+
+
+def test_job_leaves_session_overwrite_mode(spark, pages, tmp_path_factory):
+    """The job's dynamic partition overwrite is a per-write option: the
+    caller's session setting is unchanged after a run."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        job = ExtractionJob(spark, str(tmp_path_factory.mktemp("conf_job")))
+        job.run(pages.limit(40), resume=False)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_production_writer_fallback(spark, pages, tmp_path_factory):
