@@ -145,33 +145,20 @@ def _q_extract_spans_ok(spark, sf_dir):
     "source-span offsets per document"): each TEXT span must slice the
     decoded source to exactly its node's contribution; in-bounds and
     start-monotone. Checked in-kernel, aggregated."""
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType,
     )
     from fortissimo_spark.extract import validate_spans
-    from fortissimo_spark.kernel import decode_page_bytes
-    from fortissimo_spark.parser import parse as _parse
+    from fortissimo_spark.kernel import doc_kernel
 
     schema = StructType([
         StructField("url", StringType()),
         StructField("n_spans", LongType()),
         StructField("spans_ok", BooleanType()),
     ])
-
-    def kernel(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            rows = {"url": [], "n_spans": [], "spans_ok": []}
-            for url, raw in zip(b["url"].tolist(), b["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                r = _parse(text_src, positions=False)
-                n, ok = validate_spans(r.dom, r.text)
-                rows["url"].append(url)
-                rows["n_spans"].append(n)
-                rows["spans_ok"].append(ok)
-            yield pd.DataFrame(rows)
+    kernel = doc_kernel(
+        lambda raw, result, *_: (validate_spans(result.dom, result.text),),
+        ("n_spans", "spans_ok"))
 
     pages = dedup_latest_crawl(build_pages(spark, sf_dir))
     stats = pages.select("url", "html").mapInPandas(kernel, schema)
@@ -3648,7 +3635,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (anchor cap), kn_perplexity (interpolated back-off fix),
     # wet_roundtrip + warc_write_roundtrip (null-row guard + shard-count
     # fix), the host-graph block (host_reciprocity/kcore/assortativity/
-    # communities — _outlinks_kernel now shares kernel.decode_parse's
+    # communities — outlinks decode via kernel.doc_kernel and decode_parse's
     # declared-charset retry), audio_fingerprint (decode_audio gained the
     # real mp3 Layer III branch), image_dhash (new lossy-WebP lane pinning
     # the RFC 6386 VP8 decoder), video_frames (NEW: WebM EBML walk +

@@ -4,7 +4,8 @@ Behavioral parity target: ``/root/reference/projects/fortissimo-html/src/formatt
 (the library's "Formatting" third). Mutates a parsed ``DocBuilder`` in place;
 ``serialize(0)`` then yields the formatted document. In the Spark engine this
 runs document-parallel inside a ``mapInPandas`` kernel (see
-``kernel.make_format_kernel``) — it shares the batch path with extraction.
+``kernel.make_format_kernel``) — the same ``kernel.doc_kernel`` driver, and
+so the same decode, as extraction.
 
 Tri-state ``last_text`` protocol (formatter.ts:239-242): ``NULL_TEXT`` means
 "restore the saved value", ``CLEAR_TEXT`` means "discard it"; both are falsy

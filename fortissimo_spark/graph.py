@@ -23,13 +23,10 @@ dangling term per iteration.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .dom import N_ATTR_NAMES, N_ATTR_VALUES
-from .kernel import decode_parse
+from .kernel import doc_kernel
 
 __all__ = ["extract_outlinks", "resolve_href", "link_degrees", "pagerank",
            "trustrank", "hits", "salsa", "anchor_text_index", "host_graph",
@@ -38,42 +35,21 @@ __all__ = ["extract_outlinks", "resolve_href", "link_degrees", "pagerank",
            "harmonic_centrality", "hyperball_harmonic", "hyperball_alpha"]
 
 
-def _outlinks_kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        rows = {k: [] for k in ("url", "href", "anchor", "nofollow")}
-        has_ts = "warc_ts" in pdf.columns
-        if has_ts:
-            rows["warc_ts"] = []
-            ts_list = pdf["warc_ts"].tolist()
-        for ri, (url, raw) in enumerate(
-                zip(pdf["url"].tolist(), pdf["html"].tolist())):
-            # the SAME decode -> parse -> declared-charset-retry front
-            # end as page_analysis/structured_data (kernel.decode_parse)
-            # so every DOM-deriving kernel sees identical hrefs/anchors
-            # for a page whose meta charset disagrees with the sniff
-            result, _, _, _ = decode_parse(bytes(raw or b""))
-            b = result.dom
-            for a in b.query_selector_all(0, "a"):
-                nd = b.nodes[a]
-                href = rel = None
-                for an, av in zip(nd[N_ATTR_NAMES], nd[N_ATTR_VALUES]):
-                    al = an.lower()
-                    if al == "href" and href is None:
-                        href = av or ""
-                    elif al == "rel" and rel is None:
-                        rel = av or ""
-                if href is None:
-                    continue
-                rows["url"].append(url)
-                rows["href"].append(href)
-                rows["anchor"].append(b.text_content(a))
-                rows["nofollow"].append(
-                    "nofollow" in (rel or "").lower().split())
-                if has_ts:
-                    rows["warc_ts"].append(ts_list[ri])
-        yield pd.DataFrame(rows)
+def _outlink_rows(raw, result, *_):
+    """One (href, anchor, nofollow) row per ``<a href>`` of one page."""
+    b = result.dom
+    for a in b.query_selector_all(0, "a"):
+        nd = b.nodes[a]
+        href = rel = None
+        for an, av in zip(nd[N_ATTR_NAMES], nd[N_ATTR_VALUES]):
+            al = an.lower()
+            if al == "href" and href is None:
+                href = av or ""
+            elif al == "rel" and rel is None:
+                rel = av or ""
+        if href is not None:
+            yield (href, b.text_content(a),
+                   "nofollow" in (rel or "").lower().split())
 
 
 def extract_outlinks(pages: DataFrame) -> DataFrame:
@@ -88,12 +64,13 @@ def extract_outlinks(pages: DataFrame) -> DataFrame:
               StructField("href", StringType()),
               StructField("anchor", StringType()),
               StructField("nofollow", BooleanType())]
-    cols = ["url", "html"]
-    if "warc_ts" in pages.columns:
+    carry = ("warc_ts",) if "warc_ts" in pages.columns else ()
+    if carry:
         fields.append(StructField("warc_ts", TimestampType()))
-        cols.append("warc_ts")
-    return (pages.select(*cols)
-            .mapInPandas(_outlinks_kernel, StructType(fields)))
+    kernel = doc_kernel(_outlink_rows, ("href", "anchor", "nofollow"),
+                        carry=carry)
+    return (pages.select("url", "html", *carry)
+            .mapInPandas(kernel, StructType(fields)))
 
 
 def resolve_href(src_url: Column, href: Column) -> Column:

@@ -1,4 +1,4 @@
-"""Arrow-batched parse/extract kernels for ``mapInPandas``.
+"""Arrow-batched page kernels for ``mapInPandas``.
 
 Design (SURVEY.md §4.2): the JVM hands the Python worker Arrow record
 batches; per document, the byte→str decode, markup scans, and entity decode
@@ -6,8 +6,16 @@ all run in C (codecs, ``str.find``, ``re``), and the Python-level state
 machine steps only over markup boundaries (O(#tags), ~3-5% of bytes). No
 per-character Python anywhere.
 
+Every HTML/XML page kernel is one :func:`doc_kernel` driver plus a
+per-document ``rows_of`` function. The driver owns the batch loop: it
+decodes and parses each payload once through :func:`decode_parse`, asks
+``rows_of`` for the document's output rows, copies the key and carried
+input columns onto those rows column-wise, and builds one frame per batch.
+So every kernel makes the same charset decision for the same bytes, and a
+page reads the same text whichever operator parses it.
+
 Encoding policy (mirrors the reference CLI's retry loop, cli.ts:32-56, done
-in-kernel in a single pass):
+in-kernel in a single pass; :func:`decode_parse` is its only entry):
 
 1. byte-level BOM / null-pattern sniff (html-parser.ts:306-324 equivalent,
    but on raw bytes — strictly better than sniffing a mis-decoded string);
@@ -15,14 +23,19 @@ in-kernel in a single pass):
    then UTF-8 with replacement;
 3. after parsing, if the document *declares* a different charset that we can
    decode, re-decode + re-parse once (max 2 tries, like the CLI).
+
+``decode_parse``, ``parse`` and ``extract`` are looked up as module globals
+on every call (never bound at factory time), so an in-process profiler can
+swap them for timing wrappers.
 """
 
 from __future__ import annotations
 
 import codecs
+import json
 import re
 from functools import lru_cache
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -31,16 +44,11 @@ from .dom import ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_KIND, N_PARENT, \
 from .extract import extract
 from .parser import parse
 
-__all__ = ["decode_page_bytes", "process_document", "make_extract_kernel",
-           "make_nodes_kernel"]
+__all__ = ["decode_page_bytes", "decode_parse", "doc_kernel",
+           "process_document", "make_extract_kernel", "make_nodes_kernel"]
 
 _RE_META_CHARSET = re.compile(
     rb"""<meta[^>]+charset[ \t\n\f\r]*=[ \t\n\f\r]*["']?([\w-]+)""", re.I)
-
-_RE_TOKEN = re.compile(r"\S+")
-# token_count contract: the number of \S+ runs.  str.split() splits on
-# exactly the same whitespace class (verified: re's \s and str.isspace
-# agree on every codepoint), and is ~4x faster than findall.
 
 
 @lru_cache(maxsize=512)
@@ -124,131 +132,117 @@ def decode_parse(raw: bytes):
     return result, used, declared, retried
 
 
+def doc_kernel(rows_of: Callable, fields: tuple, *, key: str = "url",
+               payload: str = "html", carry: tuple = ()):
+    """Build a mapInPandas kernel from a per-document row function.
+
+    For each input row the kernel calls ``decode_parse`` once on the
+    ``payload`` bytes (NULL reads as ``b""``), then
+    ``rows_of(raw, result, used, declared, retried)``, which returns an
+    iterable of zero or more row tuples ordered as ``fields``. The output
+    frame holds ``key``, the ``carry`` columns and ``fields``; key and
+    carry values are copied by column (``values[src]``), so their dtypes
+    (tz-naive timestamps included) pass through unchanged."""
+    lead = (key, *carry)
+
+    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            rows: list[tuple] = []
+            src: list[int] = []
+            for i, raw in enumerate(pdf[payload].tolist()):
+                raw = bytes(raw) if raw is not None else b""
+                for row in rows_of(raw, *decode_parse(raw)):
+                    rows.append(row)
+                    src.append(i)
+            frame = {c: pdf[c].values[src] for c in lead}
+            columns = list(zip(*rows)) or [()] * len(fields)
+            for f, col in zip(fields, columns):
+                frame[f] = list(col)
+            yield pd.DataFrame(frame)
+
+    return kernel
+
+
+EXTRACT_FIELDS = ("text", "span_starts", "span_ends", "used_encoding",
+                  "declared_charset", "encoding_retried", "errors",
+                  "unclosed", "implicitly_closed", "node_count",
+                  "text_node_count", "characters", "lines", "text_len",
+                  "token_count", "html_bytes", "roundtrip_ok")
+
+
+def _extract_row(raw: bytes, result, used: str, declared, retried: bool,
+                 strip: str, verify_roundtrip: bool) -> tuple:
+    """The EXTRACT_FIELDS values of one decoded + parsed document."""
+    ext = extract(result.dom, strip)
+    text = ext.text
+    return (
+        text,
+        [s for s, _ in ext.spans],
+        [e for _, e in ext.spans],
+        used,
+        declared,
+        retried,
+        result.errors,
+        result.unclosed_tags,
+        result.implicitly_closed_tags,
+        ext.node_count,
+        ext.text_node_count,
+        result.characters,
+        result.lines,
+        len(text),
+        # token_count contract: the number of \S+ runs. str.split() splits
+        # on exactly the same whitespace class (re's \s and str.isspace
+        # agree on every codepoint) and is ~4x faster than re.findall.
+        len(text.split()),
+        len(raw),
+        result.to_string() == result.text if verify_roundtrip else None,
+    )
+
+
 def process_document(raw: bytes, strip: str = "density", *,
                      verify_roundtrip: bool = False) -> dict:
     """Full per-document pipeline: decode -> parse -> (maybe re-decode) -> extract."""
     result, used, declared, retried = decode_parse(raw)
-
-    ext = extract(result.dom, strip)
-    roundtrip_ok = None
-    if verify_roundtrip:
-        roundtrip_ok = result.to_string() == result.text
-
-    return {
-        "text": ext.text,
-        "span_starts": [s for s, _ in ext.spans],
-        "span_ends": [e for _, e in ext.spans],
-        "used_encoding": used,
-        "declared_charset": declared,
-        "encoding_retried": retried,
-        "errors": result.errors,
-        "unclosed": result.unclosed_tags,
-        "implicitly_closed": result.implicitly_closed_tags,
-        "node_count": ext.node_count,
-        "text_node_count": ext.text_node_count,
-        "characters": result.characters,
-        "lines": result.lines,
-        "text_len": len(ext.text),
-        "token_count": len(ext.text.split()),
-        "html_bytes": len(raw),
-        "roundtrip_ok": roundtrip_ok,
-        "_result": result,
-    }
+    doc = dict(zip(EXTRACT_FIELDS, _extract_row(
+        raw, result, used, declared, retried, strip, verify_roundtrip)))
+    doc["_result"] = result
+    return doc
 
 
 def make_extract_kernel(strip: str = "density", verify_roundtrip: bool = False):
     """Build a mapInPandas kernel: pages batches -> EXTRACT_SCHEMA batches."""
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            # per-column lists appended in one pass (same fields, same order
-            # as process_document, minus the per-doc dict round-trip)
-            texts = []; sp_starts = []; sp_ends = []; useds = []; decls = []
-            retrs = []; errs = []; uncls = []; impls = []; ncnts = []
-            tcnts = []; chars = []; lines = []; tlens = []; toks = []
-            hbytes = []; rts = []
-            for raw in pdf["html"].tolist():
-                raw = bytes(raw) if raw is not None else b""
-                result, used, declared, retried = decode_parse(raw)
-                ext = extract(result.dom, strip)
-                text = ext.text
-                texts.append(text)
-                sp_starts.append([s for s, _ in ext.spans])
-                sp_ends.append([e for _, e in ext.spans])
-                useds.append(used)
-                decls.append(declared)
-                retrs.append(retried)
-                errs.append(result.errors)
-                uncls.append(result.unclosed_tags)
-                impls.append(result.implicitly_closed_tags)
-                ncnts.append(ext.node_count)
-                tcnts.append(ext.text_node_count)
-                chars.append(result.characters)
-                lines.append(result.lines)
-                tlens.append(len(text))
-                toks.append(len(text.split()))
-                hbytes.append(len(raw))
-                rts.append(result.to_string() == result.text
-                           if verify_roundtrip else None)
-            yield pd.DataFrame({
-                "url": pdf["url"].values,
-                "warc_ts": pdf["warc_ts"].values,
-                "lang": pdf["lang"].values,
-                "text": texts, "span_starts": sp_starts, "span_ends": sp_ends,
-                "used_encoding": useds, "declared_charset": decls,
-                "encoding_retried": retrs, "errors": errs, "unclosed": uncls,
-                "implicitly_closed": impls, "node_count": ncnts,
-                "text_node_count": tcnts, "characters": chars, "lines": lines,
-                "text_len": tlens, "token_count": toks, "html_bytes": hbytes,
-                "roundtrip_ok": rts,
-            })
+    def rows_of(raw, result, used, declared, retried):
+        return (_extract_row(raw, result, used, declared, retried, strip,
+                             verify_roundtrip),)
 
-    return kernel
+    return doc_kernel(rows_of, EXTRACT_FIELDS, carry=("warc_ts", "lang"))
 
 
 def make_format_kernel(format_options: dict | None = None):
     """mapInPandas kernel: pages batches -> (url, formatted_html) — the
     document-parallel pretty-printer (formatter.ts's role at corpus scale)."""
+    from .formatter import FormatOptions, format_html
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .formatter import FormatOptions, format_html
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            urls, outs = [], []
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                result = parse(text_src, positions=False)
-                format_html(result.dom, FormatOptions(**(format_options or {})))
-                urls.append(url)
-                outs.append(result.dom.serialize(0))
-            yield pd.DataFrame({"url": urls, "formatted_html": outs})
+    def rows_of(raw, result, *_):
+        format_html(result.dom, FormatOptions(**(format_options or {})))
+        return ((result.dom.serialize(0),),)
 
-    return kernel
+    return doc_kernel(rows_of, ("formatted_html",))
 
 
 def make_stylize_kernel(style_options: dict | None = None):
     """mapInPandas kernel: pages batches -> (url, stylized_html) — the
     syntax-highlighting serializer, document-parallel."""
+    from .stylizer import StyleOptions, stylize_html
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .stylizer import StyleOptions, stylize_html
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            urls, outs = [], []
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                result = parse(text_src, positions=False)
-                urls.append(url)
-                outs.append(stylize_html(result.dom, 0,
-                                         StyleOptions(**(style_options or {}))))
-            yield pd.DataFrame({"url": urls, "stylized_html": outs})
+    def rows_of(raw, result, *_):
+        return ((stylize_html(result.dom, 0,
+                              StyleOptions(**(style_options or {}))),),)
 
-    return kernel
+    return doc_kernel(rows_of, ("stylized_html",))
 
 
 def make_events_kernel():
@@ -256,62 +250,39 @@ def make_events_kernel():
     (url, n_events, n_text_events, n_tag_events, reconstituted_ok) — the
     document-parallel form of the reference's callback API (events.py);
     ``reconstituted_ok`` asserts the byte-identity contract per page."""
+    from .events import parse_events
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .events import parse_events
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "n_events", "n_text_events",
-                                    "n_tag_events", "reconstituted_ok")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                result = parse(text_src, positions=False)
-                n = n_text = n_tag = 0
-                parts = []
-                for ev in parse_events(result):
-                    n += 1
-                    if ev.kind == "text":
-                        n_text += 1
-                    elif ev.kind == "start-tag-start":
-                        n_tag += 1
-                    parts.append(ev.src)
-                rows["url"].append(url)
-                rows["n_events"].append(n)
-                rows["n_text_events"].append(n_text)
-                rows["n_tag_events"].append(n_tag)
-                rows["reconstituted_ok"].append("".join(parts) == result.text)
-            yield pd.DataFrame(rows)
+    def rows_of(raw, result, *_):
+        n = n_text = n_tag = 0
+        parts = []
+        for ev in parse_events(result):
+            n += 1
+            if ev.kind == "text":
+                n_text += 1
+            elif ev.kind == "start-tag-start":
+                n_tag += 1
+            parts.append(ev.src)
+        return ((n, n_text, n_tag, "".join(parts) == result.text),)
 
-    return kernel
+    return doc_kernel(rows_of, ("n_events", "n_text_events", "n_tag_events",
+                                "reconstituted_ok"))
+
+
+def _selector_rows(raw, result, *_):
+    b = result.dom
+    title = b.query_selector(0, "title")
+    main = b.query_selector(0, "main")
+    return ((b.text_content(title) if title is not None else None,
+             len(b.query_selector_all(0, "a")),
+             len(b.query_selector_all(main, "p")) if main is not None else 0),)
 
 
 def make_selector_kernel():
     """mapInPandas kernel: pages batches -> per-document selector stats
     (url, title_text, n_links, n_main_paragraphs) — the distributed form of
     the querySelector/textContent surface (dom.ts:436-499 parity ops)."""
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "title_text", "n_links",
-                                    "n_main_paragraphs")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                title = b.query_selector(0, "title")
-                main = b.query_selector(0, "main")
-                rows["url"].append(url)
-                rows["title_text"].append(
-                    b.text_content(title) if title is not None else None)
-                rows["n_links"].append(len(b.query_selector_all(0, "a")))
-                rows["n_main_paragraphs"].append(
-                    len(b.query_selector_all(main, "p"))
-                    if main is not None else 0)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return doc_kernel(_selector_rows,
+                      ("title_text", "n_links", "n_main_paragraphs"))
 
 
 def _attrs_ci(builder, node: int) -> dict[str, str]:
@@ -342,8 +313,13 @@ def _robots_from_dom(b) -> tuple[bool, bool, int]:
             "nofollow" in tokens or "none" in tokens, n_meta)
 
 
-def _meta_from_dom(b) -> dict:
-    """title/first_h1/canonical/description/og_title from one DOM."""
+_META_FIELDS = ("title_text", "first_h1", "canonical", "description",
+                "og_title")
+
+
+def _meta_from_dom(b) -> tuple:
+    """_META_FIELDS (title/first_h1/canonical/description/og_title) from
+    one DOM."""
     title = b.query_selector(0, "title")
     h1 = b.query_selector(0, "h1")
     canonical = description = og_title = None
@@ -360,12 +336,9 @@ def _meta_from_dom(b) -> dict:
             description = at.get("content", "")
         elif prop == "og:title" and og_title is None:
             og_title = at.get("content", "")
-    return {
-        "title_text": b.text_content(title) if title is not None else None,
-        "first_h1": b.text_content(h1) if h1 is not None else None,
-        "canonical": canonical, "description": description,
-        "og_title": og_title,
-    }
+    return (b.text_content(title) if title is not None else None,
+            b.text_content(h1) if h1 is not None else None,
+            canonical, description, og_title)
 
 
 def make_analysis_kernel(strip: str = "density"):
@@ -375,47 +348,30 @@ def make_analysis_kernel(strip: str = "density"):
     outlink count. Running the single-purpose kernels separately parses
     each page once PER OPERATOR; at 10^12 documents the parse is the
     dominant cost, so a pipeline consuming several signals should take
-    this kernel and project."""
+    this kernel and project. Input: url, html, warc_ts."""
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in (
-                "url", "warc_ts", "text", "text_len", "token_count",
-                "errors", "noindex", "nofollow", "title_text", "first_h1",
-                "canonical", "description", "og_title", "n_links")}
-            rows["warc_ts"] = pdf["warc_ts"].tolist() \
-                if "warc_ts" in pdf.columns else [None] * len(pdf)
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                result, _, _, _ = decode_parse(bytes(raw or b""))
-                b = result.dom
-                ext = extract(b, strip)
-                noindex, nofollow, _ = _robots_from_dom(b)
-                meta = _meta_from_dom(b)
-                rows["url"].append(url)
-                rows["text"].append(ext.text)
-                rows["text_len"].append(len(ext.text))
-                rows["token_count"].append(len(ext.text.split()))
-                rows["errors"].append(result.errors)
-                rows["noindex"].append(noindex)
-                rows["nofollow"].append(nofollow)
-                for k, v in meta.items():
-                    rows[k].append(v)
-                rows["n_links"].append(len(b.query_selector_all(0, "a")))
-            yield pd.DataFrame(rows)
+    def rows_of(raw, result, *_):
+        b = result.dom
+        text = extract(b, strip).text
+        noindex, nofollow, _ = _robots_from_dom(b)
+        return ((text, len(text), len(text.split()), result.errors,
+                 noindex, nofollow, *_meta_from_dom(b),
+                 len(b.query_selector_all(0, "a"))),)
 
-    return kernel
+    return doc_kernel(rows_of, ("text", "text_len", "token_count", "errors",
+                                "noindex", "nofollow", *_META_FIELDS,
+                                "n_links"), carry=("warc_ts",))
 
 
 def page_analysis(pages, strip: str = "density") -> "DataFrame":
     """One decode+parse per page -> every per-page signal (see
-    make_analysis_kernel)."""
+    make_analysis_kernel). A NULL warc_ts stands in when pages lack
+    the column."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         BooleanType, IntegerType, LongType, StringType, StructField,
-        StructType,
+        StructType, TimestampType,
     )
-    from pyspark.sql.types import TimestampType
     schema = StructType([
         StructField("url", StringType()),
         StructField("warc_ts", TimestampType()),
@@ -432,9 +388,9 @@ def page_analysis(pages, strip: str = "density") -> "DataFrame":
         StructField("og_title", StringType()),
         StructField("n_links", IntegerType()),
     ])
-    cols = ["url", "html"] + (["warc_ts"] if "warc_ts" in pages.columns
-                              else [])
-    return (pages.select(*cols)
+    warc_ts = (F.col("warc_ts") if "warc_ts" in pages.columns
+               else F.lit(None).cast(TimestampType()).alias("warc_ts"))
+    return (pages.select("url", "html", warc_ts)
             .mapInPandas(make_analysis_kernel(strip), schema))
 
 
@@ -443,22 +399,8 @@ def make_page_meta_kernel():
     (title, first h1, rel=canonical href, meta description, og:title) —
     the per-page metadata record a crawl index stores next to the
     extracted text. Missing fields are NULL."""
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "title_text", "first_h1",
-                                    "canonical", "description", "og_title")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                rows["url"].append(url)
-                for k, v in _meta_from_dom(b).items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return doc_kernel(lambda raw, result, *_: (_meta_from_dom(result.dom),),
+                      _META_FIELDS)
 
 
 def page_metadata(pages) -> "DataFrame":
@@ -527,24 +469,10 @@ def make_tables_kernel():
     """mapInPandas kernel: pages batches -> one row per table CELL
     (structured-table extraction — the training-data path that turns
     web tables into relational records)."""
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "table_idx", "caption", "row_idx", "col_idx",
-                "is_header", "rowspan", "colspan", "cell")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                for rec in _tables_from_dom(b):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return doc_kernel(
+        lambda raw, result, *_: _tables_from_dom(result.dom),
+        ("table_idx", "caption", "row_idx", "col_idx", "is_header",
+         "rowspan", "colspan", "cell"))
 
 
 def extract_tables(pages) -> "DataFrame":
@@ -637,23 +565,8 @@ def make_sections_kernel():
     """mapInPandas kernel: pages batches -> one row per heading
     SECTION (semantic chunking for training data: split at the
     document's own outline instead of fixed token windows)."""
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "section_idx", "level", "heading", "sec_text")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                for rec in _sections_from_dom(b):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return doc_kernel(lambda raw, result, *_: _sections_from_dom(result.dom),
+                      ("section_idx", "level", "heading", "sec_text"))
 
 
 def extract_sections(pages) -> "DataFrame":
@@ -699,25 +612,9 @@ def make_template_kernel():
     n_elements) — the per-page half of template detection (group by
     (host, template_hash) downstream to find a site's templates and
     their page counts)."""
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "template_hash", "n_elements")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows: dict[str, list] = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                th, n = _template_signature(b)
-                rows["url"].append(url)
-                rows["template_hash"].append(th)
-                rows["n_elements"].append(n)
-            out = pd.DataFrame(rows, columns=cols)
-            out["n_elements"] = out["n_elements"].astype("Int32")
-            yield out
-
-    return kernel
+    return doc_kernel(
+        lambda raw, result, *_: (_template_signature(result.dom),),
+        ("template_hash", "n_elements"))
 
 
 def template_fingerprints(pages) -> "DataFrame":
@@ -902,24 +799,9 @@ def extract_rdfa(pages) -> "DataFrame":
         StructField("is_res_ref", BooleanType()),
     ])
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "res_idx", "res_type", "prop", "value",
-                "is_res_ref")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                bb = parse(text_src, positions=False).dom
-                for rec in _rdfa_from_dom(bb):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            out = pd.DataFrame(rows, columns=cols)
-            out["res_idx"] = out["res_idx"].astype("Int32")
-            yield out
-
+    kernel = doc_kernel(lambda raw, result, *_: _rdfa_from_dom(result.dom),
+                        ("res_idx", "res_type", "prop", "value",
+                         "is_res_ref"))
     return (pages.select("url", "html")
             .mapInPandas(kernel, schema))
 
@@ -940,24 +822,9 @@ def extract_microdata(pages) -> "DataFrame":
         StructField("is_item_ref", BooleanType()),
     ])
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "item_idx", "item_type", "prop", "value",
-                "is_item_ref")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                bb = parse(text_src, positions=False).dom
-                for rec in _microdata_from_dom(bb):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            out = pd.DataFrame(rows, columns=cols)
-            out["item_idx"] = out["item_idx"].astype("Int32")
-            yield out
-
+    kernel = doc_kernel(
+        lambda raw, result, *_: _microdata_from_dom(result.dom),
+        ("item_idx", "item_type", "prop", "value", "is_item_ref"))
     return (pages.select("url", "html")
             .mapInPandas(kernel, schema))
 
@@ -969,24 +836,8 @@ def make_robots_kernel():
     comma-separated token split, ``none`` = ``noindex,nofollow``). A
     corpus pipeline must honor these before publication; pages without
     directives report False/False with n_robots_meta = 0."""
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "noindex", "nofollow",
-                                    "n_robots_meta")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                noindex, nofollow, n_meta = _robots_from_dom(b)
-                rows["url"].append(url)
-                rows["noindex"].append(noindex)
-                rows["nofollow"].append(nofollow)
-                rows["n_robots_meta"].append(n_meta)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return doc_kernel(lambda raw, result, *_: (_robots_from_dom(result.dom),),
+                      ("noindex", "nofollow", "n_robots_meta"))
 
 
 def robots_flags(pages) -> "DataFrame":
@@ -1003,43 +854,63 @@ def robots_flags(pages) -> "DataFrame":
             .mapInPandas(make_robots_kernel(), schema))
 
 
+def _node_rows(raw, result, *_):
+    b = result.dom
+    depth_of = {0: -1}
+    for node in b.doc_order():
+        p = b.parent[node]
+        d = depth_of.get(p, 0) + 1
+        depth_of[node] = d
+        names = b.attr_names[node]
+        c = b.content[node]
+        yield (node, b.kind[node], b.tag_lc[node], p if p != 0 else -1,
+               b.closure[node], b.synthetic[node], d,
+               len(names) if names else 0, len(c) if c else 0,
+               b.src_start[node], b.src_end[node])
+
+
 def make_nodes_kernel():
     """Build a mapInPandas kernel: pages batches -> NODES_SCHEMA batches
     (flat per-node export for node-level corpus analytics)."""
+    return doc_kernel(_node_rows, ("node_idx", "kind", "tag", "parent",
+                                   "closure", "synthetic", "depth", "n_attrs",
+                                   "text_len", "src_start", "src_end"))
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+
+def _ld_json_rows(raw, result, *_):
+    b = result.dom
+    idx = 0
+    for s in b.query_selector_all(0, "script"):
+        stype = _attrs_ci(b, s).get("type", "")
+        if stype.strip().lower() != "application/ld+json":
+            continue
+        payload = b.text_content(s)
+        try:
+            data = json.loads(payload)
+        except (ValueError, RecursionError):
+            yield (idx, None, None, False)
+            idx += 1
+            continue
+        if isinstance(data, dict) and isinstance(data.get("@graph"), list):
+            objs = data["@graph"]
+        elif isinstance(data, list):
+            objs = data
+        else:
+            objs = [data]
+        emitted = False
+        for obj in objs:
+            if not isinstance(obj, dict):
                 continue
-            rows = {k: [] for k in ("url", "node_idx", "kind", "tag", "parent",
-                                    "closure", "synthetic", "depth", "n_attrs",
-                                    "text_len", "src_start", "src_end")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                order = b.doc_order()
-                depth_of = {0: -1}
-                for node in order:
-                    p = b.parent[node]
-                    d = depth_of.get(p, 0) + 1
-                    depth_of[node] = d
-                    rows["url"].append(url)
-                    rows["node_idx"].append(node)
-                    rows["kind"].append(b.kind[node])
-                    rows["tag"].append(b.tag_lc[node])
-                    rows["parent"].append(p if p != 0 else -1)
-                    rows["closure"].append(b.closure[node])
-                    rows["synthetic"].append(b.synthetic[node])
-                    rows["depth"].append(d)
-                    names = b.attr_names[node]
-                    rows["n_attrs"].append(len(names) if names else 0)
-                    c = b.content[node]
-                    rows["text_len"].append(len(c) if c else 0)
-                    rows["src_start"].append(b.src_start[node])
-                    rows["src_end"].append(b.src_end[node])
-            yield pd.DataFrame(rows)
-
-    return kernel
+            t = obj.get("@type")
+            if isinstance(t, list):
+                t = t[0] if t else None
+            name = obj.get("name")
+            yield (idx, t if isinstance(t, str) else None,
+                   name if isinstance(name, str) else None, True)
+            emitted = True
+        if not emitted:  # block parsed but held no entity
+            yield (idx, None, None, True)
+        idx += 1
 
 
 def make_structured_data_kernel():
@@ -1049,63 +920,8 @@ def make_structured_data_kernel():
     containers, top-level arrays, list-valued @type (first wins);
     malformed JSON yields one parse_ok=false row so the census still
     counts the block."""
-    import json
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "block_idx", "ld_type",
-                                    "ld_name", "parse_ok")}
-
-            def emit(url, idx, t, name, ok):
-                rows["url"].append(url)
-                rows["block_idx"].append(idx)
-                rows["ld_type"].append(t)
-                rows["ld_name"].append(name)
-                rows["parse_ok"].append(ok)
-
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                result, _, _, _ = decode_parse(bytes(raw or b""))
-                b = result.dom
-                idx = 0
-                for s in b.query_selector_all(0, "script"):
-                    stype = _attrs_ci(b, s).get("type", "")
-                    if stype.strip().lower() != "application/ld+json":
-                        continue
-                    payload = b.text_content(s)
-                    try:
-                        data = json.loads(payload)
-                    except (ValueError, RecursionError):
-                        emit(url, idx, None, None, False)
-                        idx += 1
-                        continue
-                    if isinstance(data, dict) and isinstance(
-                            data.get("@graph"), list):
-                        objs = data["@graph"]
-                    elif isinstance(data, list):
-                        objs = data
-                    else:
-                        objs = [data]
-                    emitted = False
-                    for obj in objs:
-                        if not isinstance(obj, dict):
-                            continue
-                        t = obj.get("@type")
-                        if isinstance(t, list):
-                            t = t[0] if t else None
-                        name = obj.get("name")
-                        emit(url, idx,
-                             t if isinstance(t, str) else None,
-                             name if isinstance(name, str) else None,
-                             True)
-                        emitted = True
-                    if not emitted:  # block parsed but held no entity
-                        emit(url, idx, None, None, True)
-                    idx += 1
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return doc_kernel(_ld_json_rows,
+                      ("block_idx", "ld_type", "ld_name", "parse_ok"))
 
 
 def structured_data(pages) -> "DataFrame":

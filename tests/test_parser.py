@@ -64,6 +64,28 @@ def test_encoding_pattern_detection(enc):
     assert normalize_encoding_name(got, explicit=False) == enc.replace("-", "")
 
 
+# the two tests above without the reference fixtures: inputs built here
+def test_encoding_switch_iso_8859_1_built():
+    html = (SMALL_SAMPLE.replace('<meta charset="utf-8">',
+                                 '<meta charset="ISO-8859-1">')
+            .replace("<body>Sample", "<body>Ma\xf1ana"))
+    raw = html.encode("iso-8859-1")
+    r = parse(raw.decode("utf-8", errors="replace"))
+    assert r.charset == "ISO-8859-1"
+    content2 = raw.decode(r.charset)
+    r2 = parse(content2)
+    assert r2.to_string() == content2 == html
+    assert "Mañana" in r2.to_string()
+
+
+@pytest.mark.parametrize("enc", ["utf-16be", "utf-16le", "utf-32be", "utf-32le"])
+def test_encoding_pattern_detection_built(enc):
+    content = SMALL_SAMPLE.encode(enc).decode("utf-8", errors="replace")
+    got = check_encoding(content[:8])
+    assert got is not None
+    assert normalize_encoding_name(got, explicit=False) == enc.replace("-", "")
+
+
 def test_empty_end_tag_as_text():
     end_body = SMALL_SAMPLE.index("</body>")
     content = SMALL_SAMPLE[:end_body] + "</> </ >" + SMALL_SAMPLE[end_body:]

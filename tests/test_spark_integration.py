@@ -4564,6 +4564,62 @@ def test_structured_data_jsonld(spark):
     ])
 
 
+def test_fanout_kernels_empty_and_null_pages(spark):
+    """The fan-out page kernels collect with their declared schemas when
+    no page yields a row, and when a NULL html shares a batch with a page
+    that does."""
+    from fortissimo_spark.kernel import (
+        extract_microdata, extract_rdfa, extract_tables, structured_data,
+        template_fingerprints,
+    )
+    rich = (b'<table><tr><td>c</table>'
+            b'<div itemscope itemtype="T"><b itemprop="p">v</b></div>'
+            b'<div typeof="R"><b property="q">w</b></div>'
+            b'<script type="application/ld+json">{"@type":"A"}</script>')
+    schema = "url string, html binary"
+    bare = spark.createDataFrame([("u1", bytearray(b"<p>plain</p>")),
+                                  ("u2", None)], schema).coalesce(1)
+    mixed = spark.createDataFrame([("u1", bytearray(rich)), ("u2", None)],
+                                  schema).coalesce(1)
+    expected = {
+        extract_tables: [("u1", 0, None, 0, 0, False, 1, 1, "c")],
+        extract_microdata: [("u1", 0, "T", "p", "v", False)],
+        extract_rdfa: [("u1", 0, "R", "q", "w", False)],
+        structured_data: [("u1", 0, "A", None, True)],
+    }
+    for op, rows in expected.items():
+        assert op(bare).collect() == []
+        assert [tuple(r) for r in op(mixed).collect()] == rows
+    empty_md5 = "d41d8cd98f00b204e9800998ecf8427e"
+    for pages in (bare, mixed):
+        got = {r.url: (r.template_hash, r.n_elements)
+               for r in template_fingerprints(pages).collect()}
+        assert got["u2"] == (empty_md5, 0)
+        assert isinstance(got["u1"][1], int) and got["u1"][1] > 0
+
+
+def test_page_kernels_carry_warc_ts(spark):
+    """warc_ts rides through page_analysis and extract_outlinks unchanged
+    when pages carry it; page_analysis reads NULL when they do not."""
+    import datetime as dt
+
+    from fortissimo_spark.graph import extract_outlinks
+    from fortissimo_spark.kernel import page_analysis
+    t0 = dt.datetime(2026, 1, 1, 12, 30, 5)
+    html = bytearray(b'<p>x <a href="/a">a</a><a href="/b">b</a></p>')
+    pages = spark.createDataFrame(
+        [("u1", t0, html), ("u2", t0 + dt.timedelta(days=1), None)],
+        "url string, warc_ts timestamp, html binary").coalesce(1)
+    assert sorted((r.url, r.warc_ts) for r in page_analysis(pages).collect()) \
+        == [("u1", t0), ("u2", t0 + dt.timedelta(days=1))]
+    assert [(r.href, r.warc_ts) for r in
+            extract_outlinks(pages).orderBy("href").collect()] \
+        == [("/a", t0), ("/b", t0)]
+    bare = page_analysis(pages.drop("warc_ts")).collect()
+    assert sorted((r.url, r.warc_ts, r.n_links) for r in bare) \
+        == [("u1", None, 2), ("u2", None, 0)]
+
+
 def test_parse_feeds_rss_atom(spark):
     """RSS 2.0 + Atom: link-as-sibling-text (void <link> in the HTML
     grammar), href attr for Atom, namespace prefixes tolerated,
